@@ -36,7 +36,8 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--cutoffs", default=None, help="explicit cutoff timestamps, comma-sep")
     p.add_argument("--run-id", default="run0")
     p.add_argument("--buckets", type=int, default=8)
-    p.add_argument("--resume", action="store_true", help="skip completed buckets")
+    p.add_argument("--resume", action="store_true",
+                   help="no-op, kept for old invocations: a rerun with the same --run-id resumes")
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -64,10 +65,6 @@ def main(argv: list[str] | None = None) -> None:
         )
     else:
         cutoffs = weekly_cutoffs(turns)
-
-    if not args.resume:
-        # fresh runs clear nothing — the manifest keys on run_id
-        pass
 
     # content snapshot of the input: a resume against CHANGED input is
     # refused (plans/manifest.py) instead of silently mixing buckets

@@ -10,12 +10,12 @@ Ships like the feature backfill::
         --keep-lang en --min-quality 0.666667 \
         --run-id c1 --buckets 8 [--resume]
 
-The per-document verdict table writes bucket-by-bucket through the
-same checkpoint manifest as the backfill (run header with input
-fingerprint + params; resume refuses changed input; completed
-buckets skip) — a killed 100 TB corpus build loses at most one
-bucket. The job ends with the curation report printed as the run
-audit.
+The per-document verdict table writes its ``bucket=K/`` dirs in one
+job through the same checkpoint manifest as the backfill (run header
+with input fingerprint + params; resume refuses changed input;
+completed buckets skip) — a corpus build killed before its commits
+redoes only the buckets it had not committed. The job ends with the
+curation report printed as the run audit.
 """
 
 from __future__ import annotations
@@ -35,7 +35,8 @@ def main(argv: list[str] | None = None) -> dict:
     p.add_argument("--min-quality", type=float, default=0.666667)
     p.add_argument("--run-id", default="c0")
     p.add_argument("--buckets", type=int, default=8)
-    p.add_argument("--resume", action="store_true", help="skip completed buckets")
+    p.add_argument("--resume", action="store_true",
+                   help="no-op, kept for old invocations: a rerun with the same --run-id resumes")
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession

@@ -22,14 +22,13 @@ cutoff deliberately by clearing its manifest row / output dir.
 
 from __future__ import annotations
 
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kkbox_churn_prediction_spark.plans.backfill import backfill_features
-from kkbox_churn_prediction_spark.plans.manifest import ManifestStore
+from kkbox_churn_prediction_spark.plans.manifest import ManifestStore, write_and_commit
 
 
 def incremental_backfill(
@@ -71,20 +70,7 @@ def incremental_backfill(
     ).withColumn(
         "cutoff_key", F.date_format("cutoff_ts", "yyyyMMdd'T'HHmmss")
     )
-    # ONE job writes all new cutoffs as partitions (dynamic overwrite
-    # touches only them — committed cutoffs' files stay untouched);
-    # commits land per cutoff after the write, so a crash mid-write
-    # re-runs only this batch of new cutoffs, never the history
-    (
-        feats.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cutoff_key")
-        .parquet(str(out / "data"))
+    rows = write_and_commit(
+        feats, "cutoff_key", out / "data", manifest, run_id, [key(c) for c in new]
     )
-    rows = 0
-    for c in new:
-        k = key(c)
-        n = spark.read.parquet(str(out / "data" / f"cutoff_key={k}")).count()
-        manifest.commit(run_id, k, n)
-        rows += n
     return {"cutoffs_run": len(new), "cutoffs_skipped": skipped, "rows": rows}

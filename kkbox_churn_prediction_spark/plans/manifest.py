@@ -4,16 +4,16 @@ Extends the reference's run manifest (``src/runlog.py:17-26`` —
 run.json with ts/seed/params/metrics per run) to PARTITION
 granularity, in the mold of Structured Streaming's idempotent-sink
 discipline: the backfill is split into ``n_buckets`` entity buckets
-(``pmod(hash(conv_id), n)``); each bucket job writes its slice of the
-feature matrix to ``out/bucket=K/`` and then appends a manifest row
-``(run_id, partition_key, row_count, status, completed_at)``. The
-write-then-commit order makes the manifest the source of truth:
+(``pmod(hash(conv_id), n)``); ONE job writes every pending bucket to
+``out/bucket=K/`` and then each appends a manifest row ``(run_id,
+partition_key, row_count, status, completed_at)`` — the protocol
+:func:`write_and_commit` shares with every manifest-tracked writer:
 
 - a bucket with a manifest row is DONE (its output is complete);
 - on restart, done buckets are skipped (anti-join on the manifest)
   and partial orphan output of unfinished buckets is overwritten —
   resume is idempotent and produces byte-identical results
-  (kill/restart test in ``tests/test_manifest.py``).
+  (kill/restart test in ``tests/test_scale_robustness.py``).
 
 With Iceberg this becomes ``MERGE INTO`` + snapshot ids (the
 ``input_fingerprint`` then carries the source snapshot id; locally
@@ -22,10 +22,8 @@ the same atomicity granularity (directory replace). A run header row
 records fingerprint + params + seed per run (``src/runlog.py:17-26``)
 and resume REFUSES to mix buckets across differing fingerprints.
 
-At scale each bucket is one Spark job over a pruned scan (bucket
-predicate pushes into the partition layout when the table is
-bucketed by conv_id), so a killed 100 TB backfill loses at most one
-bucket of work.
+The plan runs once per attempt, whatever the bucket count; a job
+killed before its commits redoes every bucket it had not committed.
 """
 
 from __future__ import annotations
@@ -36,7 +34,7 @@ import time
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -98,19 +96,16 @@ class ManifestStore:
                 done.add(str(row["partition_key"]))
         return done
 
-    def done_buckets(self, run_id: str) -> set[int]:
-        return {int(k) for k in self.done_keys(run_id)}
-
     def commit(
         self,
         run_id: str,
-        bucket: int,
+        key: int | str,
         row_count: int,
         input_fingerprint: str | None = None,
     ) -> None:
         row = {
             "run_id": run_id,
-            "partition_key": str(bucket),
+            "partition_key": str(key),
             "row_count": int(row_count),
             "input_fingerprint": input_fingerprint,
             "status": "done",
@@ -140,6 +135,42 @@ def fingerprint_parquet_dir(path: str) -> str:
     return h.hexdigest()
 
 
+def bucket_expr(col: str, n_buckets: int) -> Column:
+    """``pmod(hash(col), n)``: the bucket every reader of the layout uses."""
+    return F.pmod(F.hash(F.col(col)), F.lit(int(n_buckets)))
+
+
+def write_and_commit(
+    df: DataFrame, key_col: str, out_dir: str | Path, manifest: ManifestStore,
+    run_id: str, pending: list, input_fingerprint: str | None = None,
+    fail_after: int | None = None,
+) -> int:
+    """Write the ``pending`` keys of ``df`` to ``out_dir/<key_col>=K/`` in
+    ONE appending ``partitionBy`` job after removing their orphan dirs,
+    then commit each key's row count (0 if it got no rows) in key order;
+    returns the rows committed. ``fail_after``: crash after N commits."""
+    if not pending:
+        return 0
+    out = Path(out_dir)
+    dirs = {str(k): out / f"{key_col}={k}" for k in sorted(pending)}
+    for d in dirs.values():
+        if d.exists():
+            shutil.rmtree(d)
+    pending_rows = df.where(F.col(key_col).isin(pending))
+    pending_rows.write.mode("append").partitionBy(key_col).parquet(str(out))
+    counts = dict.fromkeys(dirs, 0)
+    written = [str(d) for d in dirs.values() if d.exists()]
+    if written:  # keys read back as strings: no type inference ("007" -> 7)
+        read = df.sparkSession.read.option("basePath", str(out))
+        rows = read.schema(f"`{key_col}` string").parquet(*written).groupBy(key_col).count()
+        counts.update({r[key_col]: r["count"] for r in rows.collect()})
+    for i, (k, n) in enumerate(counts.items(), start=1):
+        manifest.commit(run_id, k, n, input_fingerprint=input_fingerprint)
+        if fail_after is not None and i >= fail_after:
+            raise RuntimeError(f"injected failure after {i} commits")
+    return sum(counts.values())
+
+
 def resumable_backfill(
     spark: SparkSession,
     build: "callable",
@@ -152,8 +183,7 @@ def resumable_backfill(
     seed: int | None = None,
     bucket_col: str = "conv_id",
 ) -> dict:
-    """Run ``build(spark) -> DataFrame`` bucket-by-bucket with
-    checkpointing.
+    """Run ``build(spark) -> DataFrame`` into checkpointed buckets.
 
     ``build`` must return the FULL output DataFrame including the
     ``bucket_col`` identity column (conv_id for feature backfills,
@@ -182,29 +212,16 @@ def resumable_backfill(
         )
     if hdr is None:
         manifest.write_header(run_id, input_fingerprint, params, seed)
-    done = manifest.done_buckets(run_id)
+    done = manifest.done_keys(run_id)
+    pending = [b for b in range(n_buckets) if str(b) not in done]
 
-    full = build(spark).withColumn(
-        "_bucket", F.pmod(F.hash(F.col(bucket_col)), F.lit(int(n_buckets)))
+    full = build(spark).withColumn("bucket", bucket_expr(bucket_col, n_buckets))
+    rows = write_and_commit(
+        full, "bucket", out, manifest, run_id, pending,
+        input_fingerprint=input_fingerprint, fail_after=fail_after,
     )
-
-    ran = skipped = total_rows = 0
-    for b in range(n_buckets):
-        if b in done:
-            skipped += 1
-            continue
-        bucket_dir = out / f"bucket={b}"
-        if bucket_dir.exists():
-            shutil.rmtree(bucket_dir)  # orphan partial output → overwrite
-        part = full.where(F.col("_bucket") == b).drop("_bucket")
-        part.write.mode("overwrite").parquet(str(bucket_dir))
-        n = spark.read.parquet(str(bucket_dir)).count()
-        manifest.commit(run_id, b, n, input_fingerprint=input_fingerprint)
-        ran += 1
-        total_rows += n
-        if fail_after is not None and ran >= fail_after:
-            raise RuntimeError(f"injected failure after {ran} buckets")
-    return {"buckets_run": ran, "buckets_skipped": skipped, "rows": total_rows}
+    skipped = n_buckets - len(pending)
+    return {"buckets_run": len(pending), "buckets_skipped": skipped, "rows": rows}
 
 
 def read_backfill_output(spark: SparkSession, out_dir: str) -> DataFrame:

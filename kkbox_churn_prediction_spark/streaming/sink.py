@@ -14,12 +14,11 @@ bucket commits.
 
 from __future__ import annotations
 
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame
 
-from kkbox_churn_prediction_spark.plans.manifest import ManifestStore
+from kkbox_churn_prediction_spark.plans.manifest import ManifestStore, write_and_commit
 
 
 def manifest_foreach_batch(out_dir: str, run_id: str):
@@ -41,13 +40,9 @@ def manifest_foreach_batch(out_dir: str, run_id: str):
         manifest.write_header(run_id, None, params={"sink": "streaming"}, seed=None)
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        if int(batch_id) in manifest.done_buckets(run_id):
+        if str(batch_id) in manifest.done_keys(run_id):
             return  # replayed batch — already committed, exactly-once
-        batch_dir = out / f"batch={int(batch_id)}"
-        if batch_dir.exists():
-            shutil.rmtree(batch_dir)  # orphan partial from a crash
-        batch_df.write.mode("overwrite").parquet(str(batch_dir))
-        n = batch_df.sparkSession.read.parquet(str(batch_dir)).count()
-        manifest.commit(run_id, int(batch_id), n)
+        batch = batch_df.selectExpr("*", f"{int(batch_id)} AS batch")
+        write_and_commit(batch, "batch", out, manifest, run_id, [int(batch_id)])
 
     return fn

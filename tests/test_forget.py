@@ -67,3 +67,80 @@ def test_compaction_merges_files_preserving_rows(spark, tmp_path):
     assert st["buckets_compacted"] >= 1
     assert len(glob.glob(f"{out}/bucket=0/*.parquet")) == 1
     assert spark.read.parquet(f"{out}/bucket=*").count() == rows_before
+
+
+def _lineage_rows(out):
+    """Data rows the manifest vouches for: each bucket's last commit."""
+    import json
+
+    last = {}
+    for line in open(f"{out}/_manifest.jsonl"):
+        row = json.loads(line)
+        if row.get("kind") != "run":
+            last[row["partition_key"]] = row["row_count"]
+    return sum(last.values())
+
+
+def test_forget_crash_before_swap_leaves_layout_readable(spark, tmp_path, monkeypatch):
+    """A rewrite killed after its tmp dir is written must not leave
+    rows that readers of the layout pick up as data."""
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from kkbox_churn_prediction_spark.plans.forget import forget_entities
+    from kkbox_churn_prediction_spark.plans.manifest import read_backfill_output
+
+    out = f"{tmp_path}/data"
+    _layout(spark, out)
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        if str(path).endswith(".tmp"):
+            raise RuntimeError("killed after tmp write")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(RuntimeError, match="killed"):
+            forget_entities(spark, out, ["c5"], n_buckets=8, run_id="f1")
+    assert read_backfill_output(spark, out).count() == 200
+    st = forget_entities(spark, out, ["c5"], n_buckets=8, run_id="f1")
+    assert st["rows_deleted"] == 1
+    assert read_backfill_output(spark, out).count() == 199 == _lineage_rows(out)
+
+
+def test_forget_crash_mid_swap_rolls_forward(spark, tmp_path, monkeypatch):
+    """A rewrite killed after the old bucket dir left but before the tmp
+    took its place: the retry restores the bucket from the tmp."""
+    from pathlib import Path
+
+    import pytest
+
+    from kkbox_churn_prediction_spark.plans.forget import (
+        buckets_for_ids,
+        forget_entities,
+    )
+    from kkbox_churn_prediction_spark.plans.manifest import read_backfill_output
+
+    out = f"{tmp_path}/data"
+    _layout(spark, out)
+    (b,) = buckets_for_ids(spark, ["c5"], 8)
+    real_rename = Path.rename
+
+    def rename(self, target):
+        if self.name.endswith(".tmp"):
+            raise RuntimeError("killed mid-swap")
+        return real_rename(self, target)
+
+    with monkeypatch.context() as m:
+        m.setattr(Path, "rename", rename)
+        with pytest.raises(RuntimeError, match="killed"):
+            forget_entities(spark, out, ["c5"], n_buckets=8, run_id="f1")
+    assert not os.path.exists(f"{out}/bucket={b}")
+    forget_entities(spark, out, ["c5"], n_buckets=8, run_id="f1")
+    assert sorted(p.name for p in Path(out).glob("bucket=*")) == [
+        f"bucket={i}" for i in range(8)
+    ]
+    got = read_backfill_output(spark, out)
+    assert got.count() == 199 == _lineage_rows(out)
+    assert got.where(F.col("conv_id") == "c5").count() == 0

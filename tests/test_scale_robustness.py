@@ -135,6 +135,74 @@ def test_resume_refuses_changed_input_fingerprint(spark, turns, tmp_path):
     assert st["buckets_skipped"] == 1 and st["buckets_run"] == 3
 
 
+def test_resume_replaces_stray_files_in_uncommitted_bucket(spark, turns, tmp_path):
+    """Leftover parquet files in a bucket the manifest never committed
+    are dropped on resume, not appended to."""
+    from kkbox_churn_prediction_spark.plans.backfill import backfill_features
+    from kkbox_churn_prediction_spark.plans.manifest import ManifestStore
+
+    cutoffs = spark.createDataFrame(
+        pd.DataFrame({"cutoff_ts": [datetime(2024, 1, 10), datetime(2024, 1, 20)]})
+    )
+
+    def build(s):
+        return backfill_features(turns, cutoffs)
+
+    oneshot = build(spark).orderBy("conv_id", "cutoff_ts").toPandas()
+    out = tmp_path / "ckpt_stray"
+    with pytest.raises(RuntimeError, match="injected failure"):
+        resumable_backfill(spark, build, str(out), run_id="r3", n_buckets=4, fail_after=1)
+    done = ManifestStore(out / "_manifest.jsonl").done_keys("r3")
+    stray = next(b for b in range(4) if str(b) not in done)
+    build(spark).limit(3).write.mode("append").parquet(str(out / f"bucket={stray}"))
+    resumable_backfill(spark, build, str(out), run_id="r3", n_buckets=4)
+    resumed = (
+        read_backfill_output(spark, str(out)).orderBy("conv_id", "cutoff_ts").toPandas()
+    )
+    pd.testing.assert_frame_equal(
+        oneshot.reset_index(drop=True),
+        resumed[oneshot.columns].reset_index(drop=True),
+        check_dtype=False,
+    )
+
+
+def test_empty_bucket_commits_zero_rows(spark, tmp_path):
+    import json
+
+    from kkbox_churn_prediction_spark.plans.forget import buckets_for_ids
+
+    df = spark.createDataFrame([("a", 1), ("a", 2), ("b", 3)], "conv_id string, v int")
+    out = tmp_path / "ckpt_empty"
+    st = resumable_backfill(spark, lambda s: df, str(out), run_id="r4", n_buckets=8)
+    assert st == {"buckets_run": 8, "buckets_skipped": 0, "rows": 3}
+    rows = [json.loads(l) for l in (out / "_manifest.jsonl").read_text().splitlines()]
+    committed = {r["partition_key"]: r["row_count"] for r in rows if r.get("kind") != "run"}
+    want = dict.fromkeys(map(str, range(8)), 0)
+    for b, ids in buckets_for_ids(spark, ["a", "b"], 8).items():
+        want[str(b)] = sum({"a": 2, "b": 1}[i] for i in ids)
+    assert committed == want
+    assert read_backfill_output(spark, str(out)).count() == 3
+
+
+def test_resumable_backfill_runs_the_plan_once(spark, tmp_path):
+    """All pending buckets come from one execution of the build plan."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        acc.add(1)
+        return x
+
+    # nondeterministic: keeps the bucket filter from being pushed below it
+    tick_udf = F.udf(tick, "long").asNondeterministic()
+    df = spark.range(40).select(
+        F.concat(F.lit("c"), F.col("id")).alias("conv_id"), tick_udf("id").alias("v")
+    )
+    st = resumable_backfill(spark, lambda s: df, str(tmp_path / "ckpt_once"),
+                            run_id="r5", n_buckets=4)
+    assert st["rows"] == 40
+    assert acc.value == 40
+
+
 def test_fingerprint_parquet_dir_detects_change(spark, tmp_path):
     from kkbox_churn_prediction_spark.plans.manifest import fingerprint_parquet_dir
 
